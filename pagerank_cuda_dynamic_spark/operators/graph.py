@@ -7,9 +7,12 @@ Each operator returns a new DataFrame — graph mutation is snapshotting
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
 
 
 def transpose(edges: DataFrame) -> DataFrame:
@@ -55,28 +58,108 @@ def self_loop_count(edges: DataFrame) -> DataFrame:
     )
 
 
+# Largest batch side (rows) the dynamic fast paths bring to the driver:
+# tidy_batch keeps its relational plan and the delta pack declines above it
+DELTA_MAX_BATCH = int(os.environ.get("SPARK_GRAFT_DELTA_MAX_BATCH", "200000"))
+
+
+# Largest driver-local frame read as Python Rows (no Spark job, but about
+# 30 µs a row); bigger ones go through Arrow (one job, far less per row)
+ROW_COLLECT_MAX = 4096
+
+
+def collect_pairs(
+    df: DataFrame, cap: int | None = None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(src, dst) int64 arrays of an edge frame, or None when it holds more
+    than `cap` rows.  A small driver-local frame (createDataFrame from local
+    data, or any plan the optimizer folds to a LocalRelation) is read with
+    a Row collect, which runs NO Spark job; any other frame goes through
+    Arrow, at most cap + 1 rows."""
+    df = df.select("src", "dst")
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        rows = plan.data().size()
+        if cap is not None and rows > cap:
+            return None
+        if rows <= ROW_COLLECT_MAX:
+            arr = np.array(df.collect(), dtype=np.int64).reshape(-1, 2)
+            return arr[:, 0].copy(), arr[:, 1].copy()
+    pdf = (df if cap is None else df.limit(cap + 1)).toPandas()
+    if cap is not None and len(pdf) > cap:
+        return None
+    return pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+
+
+def local_pairs(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
+    """Driver-local (LocalRelation) edge frame: reading or collecting it
+    runs no job over any other table."""
+    if not len(src):
+        # an empty pandas frame skips Arrow and lands on an RDD scan; a
+        # limit(0) of a one-row frame optimizes to an empty LocalRelation
+        return local_pairs(spark, [0], [0]).limit(0)
+    pdf = pd.DataFrame(
+        {"src": np.asarray(src, np.int64), "dst": np.asarray(dst, np.int64)}
+    )
+    return spark.createDataFrame(pdf, "src long, dst long")
+
+
+def existing_pairs(edges: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Rows of `pairs` present in `edges` (hasEdge probe, batch.hxx:153–160):
+    ONE pass over the (huge) edge table with the (small) pair set broadcast
+    — never a plan that builds or shuffles the edge side."""
+    on = ["src", "dst"]
+    return edges.select(on).join(F.broadcast(pairs.select(on)), on, "left_semi")
+
+
 def tidy_batch(
     edges: DataFrame, deletions: DataFrame, insertions: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Batch hygiene (tidyBatchUpdateU, batch.hxx:201–208):
-    keep deletions that EXIST in the graph (semi join ≡ hasEdge probe,
-    batch.hxx:153–160), insertions that DON'T (anti join), both deduped.
-    Sorting (O1) is unnecessary in the set-semantics DataFrame world — kept
-    only at materialization for deterministic output."""
+    """Batch hygiene (tidyBatchUpdateU, batch.hxx:201–208): keep deletions
+    that EXIST in the graph, insertions that DON'T, both deduped.
+
+    A batch is small by the dynamic-regime contract: when each side holds
+    at most DELTA_MAX_BATCH rows it is collected once and deduped in NumPy,
+    the only Spark work is one broadcast left-semi probe of the candidate
+    pairs against the edge table (existing_pairs), and the frames returned
+    are driver-local and sorted by (src, dst) — consumers read them without
+    re-running the probe.  A bigger batch keeps the relational plan: lazy
+    frames, nothing brought to the driver."""
+    d = collect_pairs(deletions, DELTA_MAX_BATCH)
+    i = collect_pairs(insertions, DELTA_MAX_BATCH) if d is not None else None
+    if i is None:
+        return _tidy_plan(edges, deletions, insertions)
+    spark = edges.sparkSession
+    d = np.unique(np.column_stack(d), axis=0)
+    i = np.unique(np.column_stack(i), axis=0)
+    pairs = np.concatenate([d, i])
+    hits = np.empty((0, 2), np.int64)
+    if pairs.size:
+        cand = np.unique(pairs, axis=0)
+        probe = existing_pairs(edges, local_pairs(spark, cand[:, 0], cand[:, 1]))
+        hits = np.column_stack(collect_pairs(probe))
+    # one code per distinct pair, so membership is a 1-D isin
+    _, code = np.unique(np.concatenate([pairs, hits]), axis=0, return_inverse=True)
+    code = code.ravel()
+    hit = np.isin(code[: len(pairs)], code[len(pairs):])
+    dels, ins = d[hit[: len(d)]], i[~hit[len(d):]]
+    return (
+        local_pairs(spark, dels[:, 0], dels[:, 1]),
+        local_pairs(spark, ins[:, 0], ins[:, 1]),
+    )
+
+
+def _tidy_plan(
+    edges: DataFrame, deletions: DataFrame, insertions: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """tidy_batch as a relational plan, for batches too big to collect.
+    `hits` is bounded by the batch size, so the follow-up joins broadcast
+    it too (the identical broadcast subplan is reused via ReusedExchange)."""
     on = ["src", "dst"]
     d = deletions.select(on).dropDuplicates(on)
     i = insertions.select(on).dropDuplicates(on)
-    # Existence probe oriented for scale: ONE pass over the (huge) edge
-    # table with the (small, by the dynamic-batch contract) union of batch
-    # pairs broadcast — never a plan that must build/shuffle the edge side.
-    # `hits` is bounded by the batch size, so the follow-up joins broadcast
-    # it too (the identical broadcast subplan is reused via ReusedExchange).
     pairs = d.unionByName(i).dropDuplicates(on)
-    hits = (
-        edges.select(on)
-        .join(F.broadcast(pairs), on, "left_semi")
-        .dropDuplicates(on)
-    )
+    hits = existing_pairs(edges, pairs).dropDuplicates(on)
     dels = d.join(F.broadcast(hits), on, "left_semi")
     ins = i.join(F.broadcast(hits), on, "left_anti")
     return dels, ins

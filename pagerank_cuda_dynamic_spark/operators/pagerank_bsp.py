@@ -56,6 +56,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
+from pagerank_cuda_dynamic_spark.operators.graph import collect_pairs
 from pagerank_cuda_dynamic_spark.operators.pagerank import (
     PagerankOptions,
     PagerankResult,
@@ -435,10 +436,7 @@ def bsp_pack(
     return packed, bounds, n_stripes, hubs
 
 
-DELTA_MAX_BATCH = int(os.environ.get("SPARK_GRAFT_DELTA_MAX_BATCH", "200000"))
-
-
-def delta_pack(child, parent, deletions, insertions, spill_dir: str):
+def delta_pack(child, parent, d_src, d_dst, i_src, i_dst, spill_dir: str):
     """Incremental stripe pack: merge a small batch into the PARENT's
     spilled stripe records instead of re-shuffling all |E| edges.
 
@@ -459,9 +457,12 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     out-degree array from the parent's + the applied delta, so the child
     skips the |E| groupBy + |V| collect entirely.
 
+    The batch arrives as the int64 arrays with_batch collected, at most
+    DELTA_MAX_BATCH rows a side (operators.graph).
+
     Returns (None, bounds, n_stripes, hubs) — the packed-DataFrame slot is
     None because every consumer path reads the spill — or None when
-    ineligible (no parent spill, weighted, n changed, batch too big)."""
+    ineligible (no parent spill, weighted, n changed)."""
     import pickle
 
     pspill = getattr(parent, "_bsp_spill", None)
@@ -472,11 +473,6 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
     # src·n+dst keys must fit int64; weighted packs carry per-edge payloads
     # the reconstruction does not model
     if meta.get("weighted") or child.n != meta["n"] or child.n >= 2**31:
-        return None
-    lim = DELTA_MAX_BATCH
-    dpdf = deletions.select("src", "dst").limit(lim + 1).toPandas()
-    ipdf = insertions.select("src", "dst").limit(lim + 1).toPandas()
-    if len(dpdf) > lim or len(ipdf) > lim:
         return None
     bounds = np.asarray(meta["bounds"], dtype=np.int64)
     hubs = np.asarray(meta["hubs"], dtype=np.int64)
@@ -500,15 +496,11 @@ def delta_pack(child, parent, deletions, insertions, spill_dir: str):
             stripe = np.where(is_h, src % n_stripes, stripe)
         return stripe
 
-    d_src = dpdf["src"].to_numpy(np.int64)
-    d_dst = dpdf["dst"].to_numpy(np.int64)
     # universal self-loops are re-injected by the full path
     # (GraphSnapshot.build self_loops=True), so a (v,v) deletion is a
     # no-op there — match that semantics instead of removing the loop
     keep_d = d_src != d_dst
     d_src, d_dst = d_src[keep_d], d_dst[keep_d]
-    i_src = ipdf["src"].to_numpy(np.int64)
-    i_dst = ipdf["dst"].to_numpy(np.int64)
     d_stripe = _route(d_src, d_dst)
     i_stripe = _route(i_src, i_dst)
     d_key = d_src * N + d_dst
@@ -734,6 +726,9 @@ def _bsp_loop(
         # every stripe has saturated — a dense-batch (1e-3·|E|) DF run then
         # pays ND's per-superstep cost instead of a second edge walk
         mm("sat.npy", (n_stripes,), np.uint8, 0)
+        # per-stripe |affected| after superstep 0's marking — the initial
+        # marked set, also when the marking ran in-loop (movers0 seeding)
+        mm("aff0.npy", (n_stripes,), np.int64, 0)
         # movers exchanged two ways, consumers pick per stripe by size:
         # id lists (stripe s owns segment [bounds[s], bounds[s]+mcnt[row,s])
         # of movers_ids_{row%2}) are cheap to WALK when the frontier is
@@ -981,6 +976,7 @@ def _bsp_loop(
             mcnt_mm = _np.load(os.path.join(wd, "mcnt.npy"), mmap_mode="r+")
             vaff_mm = _np.load(os.path.join(wd, "vaff.npy"), mmap_mode="r+")
             sat_mm = _np.load(os.path.join(wd, "sat.npy"), mmap_mode="r+")
+            aff0_mm = _np.load(os.path.join(wd, "aff0.npy"), mmap_mode="r+")
             vaffs = {st["s"]: _np.array(vaff_mm[st["lo"]: st["hi"]], dtype=bool) for st in stripes}
             prev_As = {st["s"]: _np.empty(0, _np.int64) for st in stripes}
         deadline = time.time() + 3600
@@ -1174,6 +1170,8 @@ def _bsp_loop(
                 else:
                     A = None  # saturated: affected ≡ the whole slice
                     full_stripe = True
+                if l == 0:  # no stripe has saturated yet, so A is set
+                    aff0_mm[s] = A.size
                 rank_view = ranks[0][lo:hi]
                 rdiv_cur_v = rdivs[cur][lo:hi]
                 rdiv_nxt_v = rdivs[nxt][lo:hi]
@@ -1318,7 +1316,11 @@ def _bsp_loop(
     r = np.array(np.load(os.path.join(workdir, rank_file), mmap_mode="r"))
     el_final = float(np.load(os.path.join(workdir, "el.npy"), mmap_mode="r")[iters, :].max())
     state = {"converged": el_final < TOL, "el": el_final, "bounds": bounds}
+    affected = 0
     if dynamic:
+        affected = int(vaff0.sum())
+        if iters:
+            affected = int(np.load(os.path.join(workdir, "aff0.npy")).sum())
         state["vaff"] = np.array(
             np.load(os.path.join(workdir, "vaff.npy"), mmap_mode="r")
         ).astype(bool)
@@ -1337,7 +1339,7 @@ def _bsp_loop(
         r,
         iters,
         time.time() - t_all,
-        affected_initial=int(vaff0.sum()) if dynamic else 0,
+        affected_initial=affected,
         superstep_seconds=step_times,
         state=state,
         pack_seconds=pack_sec,
@@ -1365,31 +1367,52 @@ def pagerank_dynamic_traversal_bsp(
     return _bsp_loop(new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff)
 
 
+def _frontier_seeds(n: int, deletions, insertions):
+    """(vaff0, movers0) for the DF / DF-P loops: vaff0 = srcs(D∪I) ∪ dst(D),
+    movers0 = srcs(D∪I), from one collect of each batch frame (no job for
+    tidy_batch's driver-local frames).
+
+    Superstep 0's mover expansion over the new graph's src-CSR then marks
+    N_new(srcs(D∪I)), and for a TIDIED batch the union is exactly
+    _frontier_marks' N_old(D_src) ∪ N_new(I_src) (dst(D) restores the
+    deleted out-neighbours, self-loops put each src in its own
+    neighbourhood) — without its two distinct scans over the edge frames.
+    An untidied batch only over-marks (the dst of a missing deletion)."""
+    movers = np.zeros(n, dtype=bool)
+    vaff = np.zeros(n, dtype=bool)
+    if deletions is not None:
+        src, dst = collect_pairs(deletions)
+        movers[src] = True
+        vaff[dst] = True
+    if insertions is not None:
+        movers[collect_pairs(insertions)[0]] = True
+    return vaff | movers, movers
+
+
 def pagerank_dynamic_frontier_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
     opts = opts or PagerankOptions()
-    vaff = _frontier_marks(old, new, deletions, insertions)
+    vaff, movers = _frontier_seeds(new.n, deletions, insertions)
     return _bsp_loop(
-        new, opts, q=_adjust_warm_start(q, new.n), vaff0=vaff, expand=True
+        new,
+        opts,
+        q=_adjust_warm_start(q, new.n),
+        vaff0=vaff,
+        expand=True,
+        movers0=movers,
     )
 
 
 def pagerank_dynamic_frontier_prune_bsp(
     old, new, deletions, insertions, q: np.ndarray, opts: PagerankOptions | None = None
 ) -> PagerankResult:
-    from pagerank_cuda_dynamic_spark.operators.pagerank import (
-        _adjust_warm_start,
-        _frontier_marks,
-    )
+    from pagerank_cuda_dynamic_spark.operators.pagerank import _adjust_warm_start
 
     opts = opts or PagerankOptions()
-    vaff = _frontier_marks(old, new, deletions, insertions)
+    vaff, movers = _frontier_seeds(new.n, deletions, insertions)
     return _bsp_loop(
         new,
         opts,
@@ -1398,6 +1421,7 @@ def pagerank_dynamic_frontier_prune_bsp(
         corrected=True,
         expand=True,
         prune=True,
+        movers0=movers,
     )
 
 

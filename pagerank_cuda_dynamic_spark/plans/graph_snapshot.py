@@ -16,7 +16,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from pagerank_cuda_dynamic_spark.operators.graph import (
+    DELTA_MAX_BATCH,
     apply_batch,
+    collect_pairs,
     out_degrees,
 )
 
@@ -33,8 +35,9 @@ class GraphSnapshot:
     _packed: DataFrame | None = field(default=None, repr=False)
     _bsp_packed: tuple | None = field(default=None, repr=False)
     _bsp_spill: str | None = field(default=None, repr=False)
-    # (parent, deletions, insertions) when this snapshot came from
-    # with_batch — lets bsp_packed() build an incremental delta pack
+    # (parent, d_src, d_dst, i_src, i_dst) when this snapshot came from
+    # with_batch with a batch of at most DELTA_MAX_BATCH rows a side — lets
+    # bsp_packed() build an incremental delta pack
     _delta: tuple | None = field(default=None, repr=False)
 
     def bsp_packed(
@@ -64,9 +67,10 @@ class GraphSnapshot:
                 delta_pack,
             )
 
-            spill = _scratch_dir() + "_spill"
-            got = delta_pack(self, *self._delta, spill_dir=spill)
+            parent, *batch = self._delta
             self._delta = None  # one shot: parent ref must not pin memory
+            spill = _scratch_dir() + "_spill"
+            got = delta_pack(self, parent, *batch, spill_dir=spill)
             if got is not None:
                 self._bsp_spill = spill
                 self._bsp_packed = got
@@ -182,13 +186,28 @@ class GraphSnapshot:
         caller's responsibility to avoid (the reference never deletes the
         loops it injected).
 
+        The batch is collected once (free for tidy_batch's driver-local
+        frames; at most DELTA_MAX_BATCH rows a side, else the child keeps no
+        batch) and kept on the child as arrays for the delta pack.
+
         repartition=False is the dynamic-regime fast path and assumes a
         TIDIED batch (tidy_batch's contract: dels ⊆ E, ins ∩ E = ∅, ins
-        unique, n unchanged): the child edge set is then a NARROW plan —
-        broadcast anti-join + append, no dedup shuffle, no repartition.
-        Correct rows either way; only the physical dst-clustering differs,
-        and the BSP pack routes by its own key regardless."""
+        unique, n unchanged).  The child edge set is (E \\ D) ∪ I as a
+        narrow plan — broadcast anti-join + append, no dedup shuffle, no
+        repartition — coalesced back to the parent's partition count and
+        eagerly localCheckpoint'ed, so lineage depth and partition count
+        stay constant along a chain of batches (a persist() would keep the
+        parent's plan under every child and slow each batch more than the
+        last).  Correct rows either way; only the physical dst-clustering
+        differs, and the BSP pack routes by its own key regardless.  The
+        checkpoint lives only in executor block managers: a fast-path
+        child's edges cannot be read after unpersist(), nor after the loss
+        of an executor that held one of its blocks (no lineage to recompute
+        from)."""
         new_n = n or self.n
+        d = collect_pairs(deletions, DELTA_MAX_BATCH)
+        i = collect_pairs(insertions, DELTA_MAX_BATCH) if d is not None else None
+        batch = (*d, *i) if i is not None else None
         if repartition:
             new_edges = apply_batch(self.edges, deletions, insertions)
             child = GraphSnapshot.build(new_edges, n=new_n, self_loops=True)
@@ -197,25 +216,26 @@ class GraphSnapshot:
             on = ["src", "dst"]
             # (v,v) deletions are no-ops on the default path (build
             # re-injects universal self-loops) — hold that here too
+            gone = deletions.select(on).where(F.col("src") != F.col("dst"))
             e = (
-                self.edges.join(
-                    F.broadcast(
-                        deletions.select(on).where(F.col("src") != F.col("dst"))
-                    ),
-                    on,
-                    "left_anti",
-                )
+                self.edges.join(F.broadcast(gone), on, "left_anti")
                 .unionByName(insertions.select(on))
-                .persist()
+                .coalesce(self.edges.rdd.getNumPartitions())
+                .localCheckpoint(eager=True)
             )
-            e.count()
             child = GraphSnapshot(edges=e, n=new_n, degrees=out_degrees(e).persist())
-        child._delta = (self, deletions, insertions)
+        if batch is not None:
+            child._delta = (self, *batch)
         return child
 
     def unpersist(self) -> None:
         import shutil
 
+        plan = self.edges._jdf.logicalPlan()
+        if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+            # a fast-path child's localCheckpoint: its blocks live in the
+            # plan's internal RDD, which DataFrame.unpersist misses
+            plan.rdd().unpersist(False)
         self.edges.unpersist()
         self.degrees.unpersist()
         if self._packed is not None:

@@ -27,9 +27,13 @@ def get_spark(
 
     Defaults chosen for the iterative link-graph workload:
       - AQE on (runtime coalesce + skew-join splitting for the join/agg path);
-      - shuffle partitions ≈ cores (supersteps are many small jobs — a large
-        static 200-partition shuffle would dominate wall time; AQE coalesces
-        anyway when partitions are tiny);
+      - shuffle partitions and default parallelism = cores (supersteps are
+        many small jobs — a large static 200-partition shuffle would
+        dominate wall time; AQE coalesces anyway when partitions are tiny).
+        Never above the cores of the default local[cores] master: the BSP
+        loop's barrier stage runs one task per default-parallelism
+        partition and waits forever for tasks that cannot all be
+        scheduled at once;
       - Arrow enabled for every pandas/Arrow kernel;
       - broadcast threshold generous: degree/dictionary dims are small
         relative to the edge table and must broadcast, never shuffle.
@@ -39,7 +43,7 @@ def get_spark(
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
         )
 
     builder = (

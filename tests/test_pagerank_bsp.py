@@ -247,20 +247,63 @@ def test_bsp_fine_stripes_parity(spark):
     g.unpersist()
 
 
-def test_auto_block_width_rule():
+def test_auto_block_width_rule(monkeypatch):
     """Layout decision: env always wins; auto-block only when the rank
-    vector dwarfs LLC (>128 MB) AND p >= 16."""
+    vector dwarfs LLC (>128 MB) AND p >= 16 AND the host has >= 16 cores.
+    The host core count is pinned, so the rule is checked on any host."""
+    import os
+
     from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import (
         _auto_block_width,
     )
 
     big = 20_000_000  # 160 MB rank vector
     small = 6_650_010  # 53 MB (the 1x bench graph): stays row-order
+    monkeypatch.setattr(os, "cpu_count", lambda: 32)
     assert _auto_block_width(32, big, None) == 1_000_000
     assert _auto_block_width(8, big, None) == 0       # few cores
     assert _auto_block_width(32, small, None) == 0    # cache-resident head
     assert _auto_block_width(32, big, "0") == 0       # env forces row order
+    monkeypatch.setattr(os, "cpu_count", lambda: 8)
+    assert _auto_block_width(32, big, None) == 0      # few host cores
     assert _auto_block_width(8, small, "64") == 64    # env forces blocking
+
+
+def test_default_session_runs_bsp_on_few_cores():
+    """get_spark() with no arguments on a 2-core budget: the BSP barrier
+    stage runs one task per default-parallelism partition, so a default
+    above the task slots (the old max(cpus, 8)) waits forever.  Fresh
+    subprocess, so the session defaults are the ones under test."""
+    import os
+    import subprocess
+    import sys as _sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    probe = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "import numpy as np, pandas as pd\n"
+        "from pagerank_cuda_dynamic_spark.session import get_spark\n"
+        "from pagerank_cuda_dynamic_spark.plans.graph_snapshot import GraphSnapshot\n"
+        "from pagerank_cuda_dynamic_spark.operators.pagerank_bsp import pagerank_static_bsp\n"
+        "spark = get_spark()\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "pdf = pd.DataFrame({'src': np.arange(6), 'dst': (np.arange(6) + 1) %% 6})\n"
+        "g = GraphSnapshot.build(spark.createDataFrame(pdf), n=6)\n"
+        "r = pagerank_static_bsp(g).ranks\n"
+        "print(spark.sparkContext.defaultParallelism, round(float(r.sum()), 9))\n"
+        "spark.stop()\n" % str(repo)
+    )
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    }
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [_sys.executable, "-c", probe], capture_output=True, text=True,
+        env=env, timeout=300, check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == "2 1.0"
 
 
 def test_scratch_dirs_reaped_at_interpreter_exit(tmp_path):

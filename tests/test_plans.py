@@ -68,25 +68,59 @@ def test_filter_pushdown_and_column_pruning(spark, docs):
     assert "lang" not in read_schema and "n_chars" not in read_schema
 
 
-def test_tidy_batch_uses_broadcast_anti_join(spark):
-    """Batch tidying (J3/G10) must broadcast the small batch side — a
+def test_tidy_batch_uses_broadcast_anti_join(spark, monkeypatch):
+    """Batch tidying (J3/G10) runs ONE existence probe against the edge
+    table, and that probe must broadcast the small batch side — a
     SortMergeJoin here would shuffle the full edge table per batch, and a
-    build-side flip would try to hash the whole graph."""
+    build-side flip would try to hash the whole graph.  The semi/anti
+    filtering itself happens in NumPy on the probe's hits, so the frames
+    tidy_batch returns are driver-local and carry no join at all.  A batch
+    too big to collect keeps the relational plan, held to the same rules."""
     import pandas as pd
 
-    from pagerank_cuda_dynamic_spark.operators.graph import tidy_batch
+    from pagerank_cuda_dynamic_spark.operators import graph
 
+    probes = []
+    real_probe = graph.existing_pairs
+
+    def spy(edges, pairs):
+        probes.append(real_probe(edges, pairs))
+        return probes[-1]
+
+    monkeypatch.setattr(graph, "existing_pairs", spy)
     edges = spark.range(0, 10000).select(
         F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 10000).alias("dst")
     )
-    dels_in = spark.createDataFrame(pd.DataFrame({"src": [1, 2], "dst": [8, 15]}))
-    ins_in = spark.createDataFrame(pd.DataFrame({"src": [3, 4], "dst": [22, 29]}))
-    for df in tidy_batch(edges, dels_in, ins_in):
+    # (1, 8) and (3, 22) exist, (2, 16) and (4, 30) do not
+    dels_in = spark.createDataFrame(pd.DataFrame({"src": [1, 2, 1], "dst": [8, 16, 8]}))
+    ins_in = spark.createDataFrame(pd.DataFrame({"src": [3, 4, 4], "dst": [22, 30, 30]}))
+    dels, ins = graph.tidy_batch(edges, dels_in, ins_in)
+    assert len(probes) == 1, "tidy_batch must probe the edge table exactly once"
+    p = plan_of(probes[0])
+    assert "BroadcastHashJoin" in p
+    assert "SortMergeJoin" not in p
+    # every broadcast must build the batch-derived (right) side
+    assert "BuildLeft" not in p
+    for df in (dels, ins):
+        p = plan_of(df)
+        assert "LocalTableScan" in p and "Join" not in p
+    assert [tuple(r) for r in dels.collect()] == [(1, 8)]
+    assert [tuple(r) for r in ins.collect()] == [(4, 30)]
+    # an all-existing insertion side still comes back driver-local
+    present = spark.createDataFrame(pd.DataFrame({"src": [1, 3], "dst": [8, 22]}))
+    _, none = graph.tidy_batch(edges, dels_in, present)
+    assert none.count() == 0 and "LocalTableScan" in plan_of(none)
+    # a batch side above the collect cap keeps the relational plan, whose
+    # joins must all broadcast the batch side
+    monkeypatch.setattr(graph, "DELTA_MAX_BATCH", 2)
+    dels, ins = graph.tidy_batch(edges, dels_in, ins_in)
+    for df in (dels, ins):
         p = plan_of(df)
         assert "BroadcastHashJoin" in p
         assert "SortMergeJoin" not in p
-        # every broadcast must build the batch-derived (right) side
         assert "BuildLeft" not in p
+    assert [tuple(r) for r in dels.collect()] == [(1, 8)]
+    assert [tuple(r) for r in ins.collect()] == [(4, 30)]
 
 
 def test_entity_edges_broadcast_dims(spark):
